@@ -11,7 +11,9 @@ Plan (SURVEY.md §3.1):
       | mapInPandas(extract_batch)     <- detect+recognize+order+assemble,
       |                                   one Arrow batch at a time, zero
       |                                   further shuffle
-      | observe(metrics)               <- docs/spans counters (A8 analog)
+      | observe(docs/spans/chars)      <- commit counters (A8 analog),
+      |                                   returned, not stored: the two
+      |                                   tables below already hold them
       v write commit + lineage         <- manifest snapshot (S3/S4 analog)
 
 At 100 TB the only data movement is the optional salting repartition; it can
@@ -128,42 +130,56 @@ def run_extract_job(
       only).
     Gated urls are still written to LINEAGE under the same commit id —
     a gated url is processed work, and without its lineage row every
-    future run would re-extract and re-gate it forever. They are counted
-    in the metrics row (``gated``) and never enter the output table.
+    future run would re-extract and re-gate it forever. They never enter
+    the output table.
+
+    The metrics dict holds ints ``docs``, ``spans``, ``chars`` (row count,
+    ``sum(n_spans)``, ``sum(length(text))`` of the output commit) and
+    ``gated`` (the commit's lineage rows minus its output rows). Nothing
+    else is stored: the warehouse holds only ``extracted/`` and
+    ``lineage/``.
     """
     out_tbl = ManifestTable(f"{out_root}/extracted")
     lin_tbl = ManifestTable(f"{out_root}/lineage")
 
     # aborted-transaction reconciliation: the job commits output FIRST, then
-    # lineage — an output commit with no matching lineage commit means the
+    # lineage — an output commit newer than every lineage commit means the
     # previous run died in between, and its urls would be re-extracted (the
     # anti-join only sees lineage) producing duplicates in the output table.
     # Single-writer assumption (Iceberg-style): roll orphans back at start.
-    # (compaction commits — entries with "replaces" — are maintenance
-    # rewrites of already-lineage-covered rows, not extraction transactions:
-    # rolling one back after its sources were expired would lose data)
-    lin_ids = {s["commit_id"] for s in lin_tbl.snapshots}
+    # Maintenance rewrites (entries with "replaces") are never orphans: an
+    # output rewrite only folds lineage-covered rows, and a lineage rewrite
+    # stands for the ids it replaced, since expire() drops their entries
+    # (its own id is not counted: run after a crash, it takes the orphan's).
+    lin_last = max(
+        (
+            cid
+            for s in lin_tbl.snapshots
+            for cid in s.get("replaces") or [s["commit_id"]]
+        ),
+        default=-1,
+    )
     for snap in out_tbl.snapshots:
-        if snap["commit_id"] not in lin_ids and not snap.get("replaces"):
+        if snap["commit_id"] > lin_last and not snap.get("replaces"):
             out_tbl.rollback(snap["commit_id"])
 
     lineage = lin_tbl.read(spark)
+    # partition_id is stamped once, at extraction time: lineage records the
+    # task that produced each row
     extracted = extract_plan(
         pages,
         lineage=lineage,
         salt_partitions=salt_partitions,
         salt_mode=salt_mode,
         decode_method=decode_method,
-    )
+    ).withColumn("partition_id", F.spark_partition_id())
 
     gated = None
     n_gated = 0
     if quality_gate or dedup_threshold is not None:
         # the extraction output feeds the gate predicates AND both the
         # kept/gated splits: persist so the python stage runs once
-        extracted = extracted.withColumn(
-            "partition_id", F.spark_partition_id()
-        ).persist()
+        extracted = extracted.persist()
         kept = extracted
         if quality_gate:
             from ..operators.corpus_filters import gopher_rules
@@ -189,54 +205,31 @@ def run_extract_job(
         n_gated = gated.count()
         extracted = kept
 
+    # the reference's stream counters (base_ocr.py:32-51); sums coalesce so
+    # an empty commit reports 0, not None
     obs = Observation("extract_metrics")
     extracted = extracted.observe(
         obs,
         F.count(F.lit(1)).alias("docs"),
-        F.sum("n_spans").alias("spans"),
-        F.sum(F.length("text")).alias("chars"),
+        F.coalesce(F.sum("n_spans"), F.lit(0)).alias("spans"),
+        F.coalesce(F.sum(F.length("text")), F.lit(0)).alias("chars"),
     )
 
-    commit_id = out_tbl.next_commit_id()
-    with_lineage = (
-        extracted
-        if "partition_id" in extracted.columns
-        else extracted.withColumn("partition_id", F.spark_partition_id())
-    )
-    out_tbl.append(with_lineage, commit_id)
+    # one past either table: a lineage-only rewrite can hold the top id
+    commit_id = max(out_tbl.next_commit_id(), lin_tbl.next_commit_id())
+    out_tbl.append(extracted, commit_id)
 
     # lineage derives from what was actually committed in THIS snapshot —
     # read it back from the committed files so a mid-write crash can never
     # mark unwritten urls as done. Gated urls join it from the persisted
     # split: processed work that must never be re-extracted.
-    committed = spark.read.parquet(f"{out_tbl.data_dir}/commit={commit_id}")
+    committed = out_tbl.read_changes(spark, since=commit_id - 1, until=commit_id)
     new_lineage = lineage_of(committed, commit_id)
-    if gated is not None and n_gated:
+    if n_gated:
         new_lineage = new_lineage.unionByName(lineage_of(gated, commit_id))
     lin_tbl.append(new_lineage, commit_id)
 
-    # observe() counters land in a metrics table per commit (A8 analog:
-    # the reference's stream counters, base_ocr.py:32-51)
-    metrics = dict(obs.get)
-    metrics["gated"] = n_gated
-    metrics_tbl = ManifestTable(f"{out_root}/metrics")
-    metrics_tbl.append(
-        spark.createDataFrame(
-            [
-                (
-                    commit_id,
-                    int(metrics.get("docs") or 0),
-                    int(metrics.get("spans") or 0),
-                    int(metrics.get("chars") or 0),
-                    int(n_gated),
-                )
-            ],
-            "commit_id long, docs long, spans long, chars long, gated long",
-        ),
-        commit_id,
-    )
-
-    return commit_id, metrics
+    return commit_id, {**obs.get, "gated": n_gated}
 
 
 def run_streaming_extract(

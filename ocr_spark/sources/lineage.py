@@ -17,16 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-
 def lineage_of(extracted: DataFrame, commit_id: int) -> DataFrame:
-    pid = (
-        F.col("partition_id")
-        if "partition_id" in extracted.columns  # stamped at extraction time
-        else F.spark_partition_id()
-    )
+    """Lineage rows of ``extracted``, whose ``partition_id`` column was
+    stamped at extraction time."""
     return extracted.select(
         "url",
-        pid.alias("partition_id"),
+        "partition_id",
         F.lit(commit_id).alias("commit_id"),
         F.col("n_spans"),
         F.sha2(F.col("text").cast("binary"), 256).alias("out_sha256"),

@@ -5,8 +5,9 @@
         --output <warehouse root> [--salt-partitions N] [--decode beam]
 
 Runs one resumable extraction commit: scan -> lineage anti-join ->
-(optional salted repartition) -> single mapInPandas extraction -> manifest
-commit + lineage + metrics. Re-running after any failure processes only
+(optional salted repartition) -> single mapInPandas extraction -> output
+commit + lineage commit, and prints the commit's docs/spans/chars/gated
+counters. Re-running after any failure processes only
 the remainder (exactly-once per url; aborted commits roll back at start).
 
 Inputs: --input (pages parquet/iceberg), --warc (Common-Crawl WARC
@@ -42,7 +43,7 @@ def main():
         "--quality-gate",
         action="store_true",
         help="drop extracted docs failing the Gopher rule set before the "
-        "commit (gated urls still enter lineage and the metrics row)",
+        "commit (gated urls still enter lineage and the gated counter)",
     )
     ap.add_argument(
         "--dedup-gate",

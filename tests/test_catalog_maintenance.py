@@ -142,6 +142,67 @@ def test_reconciliation_never_rolls_back_compaction(spark, tmp_path):
     assert out_tbl.read(spark).count() == 500
 
 
+
+def test_lineage_only_compaction_keeps_output(spark, tmp_path):
+    """Maintenance that compacts+expires ONLY lineage leaves one lineage
+    commit whose id is newer than every output commit. The next run must
+    read that as "all output covered": no rollback, no re-extraction, and
+    the output rows stay byte-identical."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.plans.pipeline import run_extract_job
+    from ocr_spark.sources.pages import pages_df
+
+    out_root = str(tmp_path / "wh")
+    pages = pages_df(spark, "/root/testdata/sf0.001")
+    run_extract_job(spark, pages.where(F.crc32("url") % 2 == 0), out_root)
+    run_extract_job(spark, pages, out_root)
+
+    out_tbl = ManifestTable(f"{out_root}/extracted")
+    before = {r.url: r for r in out_tbl.read(spark).collect()}
+    lin_tbl = ManifestTable(f"{out_root}/lineage")
+    assert lin_tbl.compact(spark) == 2
+    lin_tbl.expire()
+
+    c, m = run_extract_job(spark, pages, out_root)
+    assert m["docs"] == 0
+    assert c == 3  # one past the lineage rewrite, not a reused id
+    after = {r.url: r for r in out_tbl.read(spark).collect()}
+    assert len(after) == 500 and after == before
+
+
+def test_lineage_compaction_after_crash_still_rolls_back_orphan(spark, tmp_path):
+    """A run dies between its output and lineage commits, then lineage is
+    compacted+expired before the next run; the rewrite takes the orphan's
+    id. The orphan must still be rolled back and its urls extracted once."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.operators.extract import extract_pages
+    from ocr_spark.plans.pipeline import run_extract_job
+    from ocr_spark.sources.pages import pages_df
+
+    out_root = str(tmp_path / "wh")
+    pages = pages_df(spark, "/root/testdata/sf0.001")
+    third = F.crc32("url") % 3
+    run_extract_job(spark, pages.where(third == 0), out_root)
+    run_extract_job(spark, pages.where(third != 2), out_root)
+    out_tbl = ManifestTable(f"{out_root}/extracted")
+    out_tbl.append(extract_pages(pages.where(third == 2)), 2)  # the orphan
+    lin_tbl = ManifestTable(f"{out_root}/lineage")
+    assert lin_tbl.compact(spark) == 2
+    lin_tbl.expire()
+
+    _, m = run_extract_job(spark, pages, out_root)
+    assert m["docs"] == pages.where(third == 2).count()
+    assert 2 not in {s["commit_id"] for s in out_tbl.snapshots}
+    exp = pages_df(spark, "/root/testdata/sf0.001", with_expected=True).select(
+        "url", "expected_text"
+    )
+    out = out_tbl.read(spark)
+    assert out.select("url").distinct().count() == out.count() == 500
+    j = out.join(exp, "url")
+    assert j.filter(F.col("text") == F.col("expected_text")).count() == 500
+
 def test_merge_upserts_and_prunes_untouched_commits(spark, tmp_path):
     tbl = _mk(spark, tmp_path)  # commits 0,1,2 with ids 0..3,100..103,200..203
     before = {s["commit_id"]: s["path"] for s in tbl.snapshots}

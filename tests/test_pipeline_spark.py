@@ -5,6 +5,8 @@ Acceptance invariant (BASELINE.json): byte-identical extracted text per url,
 exact resume from lineage, identical results at different parallelism.
 """
 
+import os
+
 import pytest
 
 from ocr_spark.operators.extract import extract_pages
@@ -14,9 +16,30 @@ from ocr_spark.sources.pages import pages_df
 from tests.conftest import SF_SMOKE
 
 
+NOOP = {"docs": 0, "spans": 0, "chars": 0, "gated": 0}
+
+
 @pytest.fixture(scope="module")
 def golden(spark):
     return pages_df(spark, SF_SMOKE, with_expected=True).cache()
+
+
+def assert_counters_match_tables(spark, out_root, commit_id, m):
+    """run_extract_job stores its counters nowhere: they must be ints equal
+    to what the warehouse's only two tables hold for the commit."""
+    from pyspark.sql import functions as F
+
+    assert sorted(os.listdir(out_root)) == ["extracted", "lineage"]
+    assert set(m) == set(NOOP) and all(type(v) is int for v in m.values()), m
+    out = ManifestTable(f"{out_root}/extracted").read_changes(
+        spark, since=commit_id - 1, until=commit_id
+    )
+    docs, spans, chars = out.agg(
+        F.count(F.lit(1)), F.sum("n_spans"), F.sum(F.length("text"))
+    ).first()
+    assert (m["docs"], m["spans"], m["chars"]) == (docs, spans or 0, chars or 0)
+    lineage = ManifestTable(f"{out_root}/lineage").read(spark)
+    assert m["docs"] + m["gated"] == lineage.where(F.col("commit_id") == commit_id).count()
 
 
 def test_pages_schema(spark, golden):
@@ -79,6 +102,12 @@ def test_resume_exactly_once(spark, golden, tmp_path):
     assert lineage.count() == 500
     cols = set(lineage.columns)
     assert {"url", "partition_id", "commit_id", "n_spans", "out_sha256"} <= cols
+
+    # nothing pending: the counters are zeros, not None
+    commit3, m3 = run_extract_job(spark, pages, out_root, salt_partitions=4)
+    assert m3 == NOOP
+    for c, m in ((commit1, m1), (commit2, m2), (commit3, m3)):
+        assert_counters_match_tables(spark, out_root, c, m)
 
 
 def test_plan_has_no_shuffle_without_salting(spark, golden, tmp_path):
@@ -366,7 +395,8 @@ def test_quality_and_dedup_gates(spark, tmp_path):
 
     # resume over the same input: nothing left to process OR re-gate
     c2, m2 = run_extract_job(spark, pages, out_root, quality_gate=True)
-    assert (m2["docs"] or 0) == 0 and m2["gated"] == 0
+    assert m2 == NOOP
+    commits = [(c1, m1), (c2, m2)]
 
     # dedup gate: re-ingesting the SAME pages under shifted urls — every
     # doc is an exact dup of a committed one (Jaccard 1.0) IF anything
@@ -376,8 +406,11 @@ def test_quality_and_dedup_gates(spark, tmp_path):
         c3, m3 = run_extract_job(
             spark, dup_wave, out_root, dedup_threshold=0.9
         )
-        assert (m3["docs"] or 0) == 0
+        assert m3["docs"] == 0
         assert m3["gated"] == dup_wave.count()
         # gated mirrors are lineage-recorded too
         lin2 = ManifestTable(f"{out_root}/lineage").read(spark)
         assert lin2.select("url").distinct().count() == 2 * n_pages
+        commits.append((c3, m3))
+    for c, m in commits:
+        assert_counters_match_tables(spark, out_root, c, m)
